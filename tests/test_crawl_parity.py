@@ -82,29 +82,12 @@ def test_crawl_parity_restriction_levels(spark):
         _compare(_spark_result(spark, corpus, cfg), _oracle_result(corpus, ocfg))
 
 
-def test_crawl_parity_bloom_prefilter(spark):
-    """Bloom-accelerated URL-seen path must be result-identical."""
-    corpus = small_corpus(CorpusSpec(n_hosts=2, pages_per_host=12))
-    cfg = CrawlConfig(max_depth=3, max_rounds=8, bloom_prefilter=True)
-    ocfg = O.OracleConfig(max_depth=3, max_rounds=8)
-    _compare(_spark_result(spark, corpus, cfg), _oracle_result(corpus, ocfg))
-
-
-def test_crawl_parity_cuckoo_prefilter(spark):
-    """Incrementally-maintained cuckoo URL-seen path must be
-    result-identical (build once, insert each round's visited delta)."""
-    corpus = small_corpus(CorpusSpec(n_hosts=2, pages_per_host=12))
-    cfg = CrawlConfig(max_depth=3, max_rounds=8, seen_filter="cuckoo")
-    ocfg = O.OracleConfig(max_depth=3, max_rounds=8)
-    _compare(_spark_result(spark, corpus, cfg), _oracle_result(corpus, ocfg))
-
-
-def test_cuckoo_release_then_refetch(spark, tmp_path):
+def test_release_seen_then_refetch(spark, tmp_path):
     """End-to-end re-crawl through CrawlEngine (r2 verdict item 10):
-    run1 crawls and populates the incremental cuckoo filter; run2
-    chained on run1's seen set fetches NOTHING new (every link is
-    seen); after release_seen() on the re-crawl-eligible source, run3
-    fetches that source's URLs again — the delete→refetch path.
+    run1 crawls; run2 chained on run1's seen set fetches NOTHING new
+    (every link is seen); after release_seen() on the re-crawl-eligible
+    source, run3 fetches that source's URLs again — the
+    release→refetch path.
     work_dir is SET so the chained prior state must survive the
     delta-dir checkpoint commits across rounds (regression: the
     work_dir scan used to drop the prior union after round 1)."""
@@ -112,19 +95,18 @@ def test_cuckoo_release_then_refetch(spark, tmp_path):
 
     corpus = small_corpus(CorpusSpec(n_hosts=2, pages_per_host=10))
     dfs = corpus_to_spark(spark, corpus)
-    cfg = CrawlConfig(max_depth=2, max_rounds=6, seen_filter="cuckoo")
+    cfg = CrawlConfig(max_depth=2, max_rounds=6)
     eng = CrawlEngine(spark, dfs["documents"], cfg=cfg, work_dir=str(tmp_path / "state"))
 
     res1 = eng.run(dfs["seeds"], run_id="rc1")
-    assert eng._cuckoo is not None  # filter built + incrementally fed
     pages1 = {
         (r["source_id"], r["url"]) for r in res1.pages.collect() if r["depth"] > 0
     }
     assert pages1, "run1 must fetch beyond the seed pages"
     seen1 = res1.visited.localCheckpoint(eager=True)
 
-    # run2: same sources, chained seen set, SAME long-lived filter —
-    # every previously-fetched link is a duplicate now
+    # run2: same sources, chained seen set — every previously-fetched
+    # link is a duplicate now
     res2 = eng.run(dfs["seeds"], run_id="rc2", initial_visited=seen1)
     pages2 = {
         (r["source_id"], r["url"]) for r in res2.pages.collect() if r["depth"] > 0

@@ -132,6 +132,26 @@ def test_verify_pairs_jaccard_kills_false_positives(spark):
     assert {(a, b) for a, b, _ in got} == {(1, 2)}
 
 
+def test_verify_pairs_jaccard_threshold_zero_drops_disjoint_pairs(spark):
+    """At threshold 0 a candidate pair sharing no shingle must still be
+    dropped, as the inner join on the shared-count aggregate did."""
+    from thecrowler_spark.operators.dedup import verify_pairs_jaccard
+
+    base = ("the quick brown fox jumps over the lazy dog near the old "
+            "river bank under a pale morning sky while birds circle")
+    rows = [
+        (1, base + " version alpha"),
+        (2, base + " version bravo"),
+        (3, "a wholly different essay on spark shuffle planning with "
+            "unique vocabulary everywhere no overlap at all here"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    cand = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], "id_a long, id_b long")
+    got = verify_pairs_jaccard(docs, cand, threshold=0.0).collect()
+    assert {(r["id_a"], r["id_b"]) for r in got} == {(1, 2)}
+    assert all(r["jaccard"] > 0 for r in got)
+
+
 def test_winnow_pairs_planted_shared_run(spark):
     """Winnowing guarantee: two docs sharing a ≥ w+k−1-token run share
     ≥1 fingerprint → the pair is found; unrelated docs are not paired;

@@ -174,3 +174,37 @@ def test_selector_signatures_planted(spark):
     v = got[(2, "Vue")]
     assert v.confidence == 76.0 and v.matched_patterns == "*"
     assert not any(d == 3 for d, _ in got)
+
+
+def test_null_rule_confidence_counts_as_zero(spark):
+    """A rule row with NULL confidence must not break plan building. It
+    counts as 0.0: it adds nothing to the object's confidence sum (the
+    old null-propagating column form's sum skipped it too), but its
+    match still shows in the patterns and the entity type."""
+    pages = spark.createDataFrame(
+        [(1, "https://x.example.com/a", "alpha sigone beta", {}, [])],
+        "doc_id long, url string, body string, headers map<string,string>, "
+        "metas array<struct<name:string,content:string>>",
+    )
+    schema = (
+        "object_name string, kind string, key string, attribute string, "
+        "pattern string, confidence double, implies array<string>"
+    )
+    rules = spark.createDataFrame(
+        [
+            ("techA", "body", "*", "", "sigone", 6.0, []),
+            ("techA", "url", "*", "", "x\\.example", None, []),
+            ("techB", "body", "*", "", "beta", None, []),
+            ("techC", "header_absent", "x-frame-options", "", "", None, []),
+        ],
+        schema,
+    )
+    got = {r["entity_name"]: r for r in detect_technologies(pages, rules).collect()}
+    body_only = rules.filter("object_name = 'techA' AND kind = 'body'")
+    alone = {r["entity_name"]: r for r in detect_technologies(pages, body_only).collect()}
+    # techA: the NULL leg adds 0 to x, so the curve value is unchanged
+    assert got["techA"]["confidence"] == alone["techA"]["confidence"]
+    assert got["techA"]["matched_patterns"] == "sigone|x\\.example"
+    assert got["techA"]["entity_type"] == "url,html"
+    # an object whose only evidence has NULL confidence scores x=0 → dropped
+    assert "techB" not in got and "no_techC" not in got and "techC" not in got

@@ -5,7 +5,11 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from thecrowler_spark.operators.ranking import global_row_number, ntile_distributed
+from thecrowler_spark.operators.ranking import (
+    global_row_number,
+    lag_range_partitioned,
+    ntile_distributed,
+)
 
 
 def _nums(spark, n):
@@ -68,3 +72,21 @@ def test_global_row_number_no_global_sort(spark):
     for line in plan.splitlines():
         if "Sort [" in line and "true" in line.split("Sort [", 1)[1][:200]:
             raise AssertionError(f"global sort found: {line.strip()}")
+
+
+def test_lag_range_partitioned_null_group_matches_window(spark):
+    """A NULL group key is one partition for the native window; the
+    carry row handed across range chunks must reach it too."""
+    df = spark.range(4000).select(
+        F.col("id"),
+        F.when(F.col("id") % 10 < 8, F.lit(None).cast("string"))
+        .otherwise(F.concat(F.lit("g"), (F.col("id") % 2).cast("string")))
+        .alias("grp"),
+        ((F.col("id") * 7) % 13).alias("v"),
+    )
+    got = lag_range_partitioned(df, ["grp"], ["id"], ["v"], num_partitions=8)
+    w = Window.partitionBy("grp").orderBy("id")
+    want = df.select("id", F.lag("v").over(w).alias("_lag_v"))
+    diff = got.select("id", "_lag_v").exceptAll(want)
+    assert diff.count() == 0, diff.orderBy("id").limit(5).collect()
+    assert got.count() == 4000

@@ -298,8 +298,10 @@ def verify_pairs_jaccard(
     EXACTLY the old ones: array_intersect of distinct sets ≡ the
     shared-distinct-shingle count, sizes ≡ the distinct counts, and
     docs whose shingle set is empty (zero tokens) are excluded from the
-    table exactly as the explode form excluded them (their pairs emit
-    nothing, matching the old inner-join behavior for ANY threshold).
+    table exactly as the explode form excluded them, and pairs sharing
+    no shingle are dropped as the old inner join on the shared-count
+    aggregate dropped them — so the output matches for ANY threshold,
+    including threshold <= 0.
 
     Cost is O(pairs × avg_shingles), never all-pairs. Mirrors the
     verification step of classic MinHash-LSH dedup; scale shape: two
@@ -329,6 +331,7 @@ def verify_pairs_jaccard(
         pairs.join(a, "id_a")
         .join(b, "id_b")
         .withColumn("shared", shared)
+        .filter(F.col("shared") > 0)
         .withColumn(
             "jaccard",
             F.round(F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")), 6),

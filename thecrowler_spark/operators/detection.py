@@ -228,9 +228,10 @@ def detect_technologies(
 
     legs: list[F.Column] = []
     for r in rule_rows:
-        name, kind, key, pat, conf = (
-            r["object_name"], r["kind"], r["key"], r["pattern"], r["confidence"]
-        )
+        name, kind, key, pat = r["object_name"], r["kind"], r["key"], r["pattern"]
+        # a NULL confidence adds nothing to the per-object sum (sum
+        # skips NULL); its events still count toward patterns and type
+        conf = 0.0 if r["confidence"] is None else r["confidence"]
         if kind == "body":
             legs.append(cond_leg(
                 F.regexp_like(F.col("_body"), F.lit(pat)), name, "body", pat, conf))

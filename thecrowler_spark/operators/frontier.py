@@ -81,15 +81,6 @@ class CrawlConfig:
     user_url_patterns: tuple[str, ...] = ()
     max_rounds: int = 50  # safety net for max_depth=0
     salt_buckets: int = 16
-    bloom_prefilter: bool = False
-    #: URL-seen prefilter mode: "" honors bloom_prefilter; "bloom"
-    #: rebuilds a bloom from the visited set each round (stateless,
-    #: O(seen) rebuild); "cuckoo" maintains a partial-key cuckoo filter
-    #: INCREMENTALLY — built once, then each round inserts only the
-    #: visited DELTA (O(delta) maintenance, the 10^10-seen-URLs path).
-    #: Both are never authoritative: positives always get the exact
-    #: join, so the final seen-set is identical in every mode (tested).
-    seen_filter: str = ""
     shuffle_partitions: int | None = None
     #: mega-source escape hatch. 1 (default) = exact reference ordering
     #: parity: per-source sequencing windows serialize each source onto
@@ -433,11 +424,6 @@ class CrawlEngine:
         self.robots = robots if (robots is not None and self.cfg.check_robots) else None
         self.budgets = budgets if (budgets is not None and self.cfg.use_host_budget) else None
         self.work_dir = work_dir
-        mode = self.cfg.seen_filter or ("bloom" if self.cfg.bloom_prefilter else "")
-        if mode not in ("", "bloom", "cuckoo"):
-            raise ValueError(f"unknown seen_filter mode: {mode!r}")
-        self._seen_mode = mode
-        self._cuckoo: DataFrame | None = None  # incremental blobs (cuckoo mode)
         #: DUST valve (operators/dust.py): mined (host, param) rules —
         #: e.g. from a prior run's fetch log via dust_rules() — applied
         #: to the URL-SEEN DEDUP KEY only (fetch url untouched), the
@@ -525,10 +511,9 @@ class CrawlEngine:
         runs (periodic re-crawl, SURVEY §2.9): URLs in it are NOT
         refetched when rediscovered as links, unless first released via
         :meth:`release_seen`. Only this run's NEW keys are committed to
-        this run's checkpoints and inserted into the incremental cuckoo
-        filter — cross-run storage belongs to the prior run's
-        checkpoints (pass ``initial_visited`` again when resuming a
-        chained run)."""
+        this run's checkpoints — cross-run storage belongs to the prior
+        run's checkpoints (pass ``initial_visited`` again when resuming
+        a chained run)."""
         cfg = self.cfg
         spark = self.spark
         lineage: list[dict[str, Any]] = []
@@ -658,25 +643,6 @@ class CrawlEngine:
 
         # depth-0 state is the base delta of the append-only page/visited logs
         pages = self._ckpt_delta(pages.limit(0), pages, run_id, 0, "pages")
-        if self._seen_mode == "cuckoo" and self._cuckoo is not None:
-            # long-lived filter reused across runs: the depth-0 delta
-            # (newly-claimed sources' seed keys) must enter the filter,
-            # or a later link back to a seed URL would probe "definitely
-            # unseen" and skip the exact check (false negative)
-            from .cuckoo import insert_cuckoo
-
-            seed_keys = visited.select(
-                F.concat_ws(
-                    "\x00", F.col("source_id").cast("string"), F.col("norm_url")
-                ).alias("_skey")
-            )
-            self._cuckoo = self._ckpt(
-                insert_cuckoo(
-                    self._cuckoo, seed_keys, key_col="_skey",
-                    n_buckets=self.cfg.salt_buckets,
-                ),
-                run_id, 0, "cuckoo",
-            )
         visited = self._ckpt_delta(visited.limit(0), visited, run_id, 0, "visited")
         if prior_vis is not None:
             # live state = this run's committed deltas ∪ the caller's
@@ -706,35 +672,13 @@ class CrawlEngine:
         from the long-lived seen state so the next :meth:`run` (with the
         returned frame as ``initial_visited``) fetches them again.
 
-        Two coupled O(released-delta) effects — never an O(seen) rebuild:
-
-        - the exact visited table loses those sources' rows (anti-join —
-          this is what governs result correctness);
-        - in ``seen_filter="cuckoo"`` mode the incremental filter
-          DELETES those keys (:func:`..operators.cuckoo.delete_cuckoo`
-          — the deletion a bloom filter cannot do without rescanning
-          all 10^10 surviving keys).
+        The exact visited table loses those sources' rows (an
+        anti-join against the broadcast ``source_id`` list).
 
         ``eligible`` is any frame with a ``source_id`` column — e.g. the
         output of :func:`claim_sources` with ``regular_crawling`` set.
         """
         el = F.broadcast(eligible.select("source_id").dropDuplicates())
-        if self._seen_mode == "cuckoo" and self._cuckoo is not None:
-            from .cuckoo import delete_cuckoo
-
-            released_keys = visited.join(el, "source_id").select(
-                F.concat_ws(
-                    "\x00", F.col("source_id").cast("string"), F.col("norm_url")
-                ).alias("_skey")
-            )
-            new_ck = delete_cuckoo(
-                self._cuckoo, released_keys, key_col="_skey",
-                n_buckets=self.cfg.salt_buckets,
-            ).persist()
-            new_ck.count()  # materialize before releasing the old blobs
-            old = self._cuckoo
-            self._cuckoo = new_ck
-            old.unpersist()
         return visited.join(el, "source_id", "left_anti")
 
     def _run_rounds(
@@ -802,24 +746,6 @@ class CrawlEngine:
                 # branch unions onto cur_state, which already has it)
                 visited = visited.unionByName(prior_visited)
             frontier = self._ckpt(self._trap_valve(new_frontier), run_id, depth, "frontier")
-            if self._seen_mode == "cuckoo" and self._cuckoo is not None:
-                # incremental maintenance: insert only this round's
-                # visited delta (O(delta)); checkpoint the small blob
-                # table so the plan never chains across rounds
-                from .cuckoo import insert_cuckoo
-
-                delta_keys = visited_delta.select(
-                    F.concat_ws(
-                        "\x00", F.col("source_id").cast("string"), F.col("norm_url")
-                    ).alias("_skey")
-                )
-                self._cuckoo = self._ckpt(
-                    insert_cuckoo(
-                        self._cuckoo, delta_keys, key_col="_skey",
-                        n_buckets=self.cfg.salt_buckets,
-                    ),
-                    run_id, depth, "cuckoo",
-                )
             if deferred is not None:
                 # deferred rows are next-round input state — commit them
                 # like the frontier so kill-and-resume replays them too
@@ -948,57 +874,12 @@ class CrawlEngine:
         lv = _robots_block(lv, self.robots)
         lv = lv.withColumn("is_skip", F.col("is_skip") | F.col("robots_blocked"))
 
-        # visited-set probe: equi anti-join semantics via left join marker.
-        # With a prefilter on, filter-negative rows skip the exact join
-        # (definitely unseen); positives still get the exact check, so the
-        # final seen-set is identical in every mode (bloom.py/cuckoo.py
-        # contract). Bloom rebuilds from the full visited set each round;
-        # cuckoo is maintained incrementally (insert-the-delta in
-        # _run_rounds) — at 10^10 seen URLs that drops the per-round
-        # O(seen) rebuild scan to O(delta).
-        if self._seen_mode:
-            skey = F.concat_ws("\x00", F.col("source_id").cast("string"), F.col("norm_url"))
-            vis_keyed = visited.select(skey.alias("_skey"))
-            if self._seen_mode == "bloom":
-                from .bloom import build_bloom, probe_bloom
-
-                filt = build_bloom(vis_keyed, key_col="_skey", n_buckets=cfg.salt_buckets)
-                probed = probe_bloom(
-                    lv.withColumn("_skey", skey), filt, key_col="_skey", n_buckets=cfg.salt_buckets
-                )
-                flag = "bloom_maybe"
-            else:
-                from .cuckoo import build_cuckoo, probe_cuckoo
-
-                if self._cuckoo is None:
-                    self._cuckoo = build_cuckoo(
-                        vis_keyed, key_col="_skey", n_buckets=cfg.salt_buckets
-                    ).persist()
-                probed = probe_cuckoo(
-                    lv.withColumn("_skey", skey),
-                    self._cuckoo,
-                    key_col="_skey",
-                    n_buckets=cfg.salt_buckets,
-                )
-                flag = "cuckoo_maybe"
-            neg = probed.filter(~F.col(flag)).withColumn("_seen", F.lit(False))
-            pos = (
-                probed.filter(F.col(flag))
-                .join(
-                    vis_keyed.withColumn("_vseen", F.lit(True)),
-                    ["_skey"],
-                    "left",
-                )
-                .withColumn("_seen", F.coalesce(F.col("_vseen"), F.lit(False)))
-                .drop("_vseen")
-            )
-            lv = neg.unionByName(pos).drop(flag, "_skey")
-        else:
-            lv = lv.join(
-                visited.withColumn("_seen", F.lit(True)),
-                ["source_id", "norm_url"],
-                "left",
-            ).withColumn("_seen", F.coalesce(F.col("_seen"), F.lit(False)))
+        # visited-set probe: equi anti-join semantics via left join marker
+        lv = lv.join(
+            visited.withColumn("_seen", F.lit(True)),
+            ["source_id", "norm_url"],
+            "left",
+        ).withColumn("_seen", F.coalesce(F.col("_seen"), F.lit(False)))
 
         # first-occurrence-within-level among non-skipped (sequential visited updates)
         w_norm = Window.partitionBy("source_id", "norm_url").orderBy("seq")

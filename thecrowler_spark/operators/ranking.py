@@ -159,10 +159,14 @@ def lag_range_partitioned(
         ).alias("_lastvals")
     )
     w_carry = Window.partitionBy(*group_cols).orderBy("_pid")
+    # the carry join is null-safe on the group keys: the native window
+    # treats a NULL group as one partition, so its carry must match too
+    ckeys = {c: f"_carry_{c}" for c in ["_pid", *group_cols]}
     carry = lasts.withColumn("_carry", F.lag("_lastvals").over(w_carry)).select(
-        "_pid", *group_cols, "_carry"
+        "_carry", *[F.col(c).alias(a) for c, a in ckeys.items()]
     )
-    out = out.join(F.broadcast(carry), ["_pid", *group_cols], "left")
+    on = [F.col(c).eqNullSafe(F.col(a)) for c, a in ckeys.items()]
+    out = out.join(F.broadcast(carry), on, "left").drop(*ckeys.values())
     for c in lag_cols:
         out = out.withColumn(
             f"_lag_{c}",
