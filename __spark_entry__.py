@@ -5320,7 +5320,7 @@ def _cdx_latest_oracle_sql() -> str:
     """
 
 
-#: sessions already warmed by _warm_session (session ids, not results)
+#: sessions already warmed by _warm_session (application ids, not results)
 _WARMED_SESSIONS: set = set()
 
 
@@ -5344,7 +5344,9 @@ def _warm_session() -> None:
     spark = SparkSession.getActiveSession()
     if spark is None:
         return
-    sid = id(spark)
+    # the applicationId, not id(spark): CPython may hand a collected
+    # session's id to a later one, which would then go unwarmed
+    sid = spark.sparkContext.applicationId
     if sid in _WARMED_SESSIONS:
         return
     _WARMED_SESSIONS.add(sid)

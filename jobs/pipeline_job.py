@@ -116,8 +116,8 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                         "contribution (default: basename of --output). A "
                         "replayed batch REPLACES its own tagged rows instead "
                         "of re-adding them, so at-least-once redelivery "
-                        "(streaming foreachBatch, CLI retry on the same "
-                        "output dir) never over-counts")
+                        "(q_pipeline_incremental's batches, CLI retry on "
+                        "the same output dir) never over-counts")
     p.add_argument("--budget", type=int, default=2048, help="tokens per pack")
     p.add_argument("--buckets", type=int, default=64, help="packing streams")
     p.add_argument("--train", type=float, default=0.98)
@@ -209,8 +209,8 @@ def parse_mixture(spec: str) -> "tuple[int, dict[str, int]]":
 
 def run_pipeline(spark, args, docs_df=None) -> dict:
     """Run the full stage chain. ``docs_df`` (doc_id, text) overrides
-    ``--input`` — the hook streaming ingest uses to feed a micro-batch
-    directly (streaming/curation.py) without a detour through disk."""
+    ``--input`` — the hook ``q_pipeline_incremental`` uses to feed each
+    batch directly without a detour through disk."""
     from pyspark.sql import functions as F
 
     from thecrowler_spark.functions import text as TX

@@ -1,13 +1,10 @@
-"""Multi-engine claim disjointness + streaming poll trigger."""
+"""Multi-engine claim disjointness + interval eligibility and stale reclaim."""
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import functions as F
 
 from thecrowler_spark.operators.frontier import claim_sources
-from thecrowler_spark.streaming.trigger import crawl_trigger_stream
 
 
 def _seeds(spark, n=200):
@@ -40,21 +37,6 @@ def test_multi_engine_claims_are_disjoint_and_exhaustive(spark):
     # stable across retries (deterministic ownership)
     again = {r["source_id"] for r in claim_sources(seeds, 1000, engine_id=0, n_engines=4).collect()}
     assert again == claimed[0]
-
-
-def test_crawl_trigger_ticks(spark, tmp_path):
-    ticks: list[int] = []
-    q = crawl_trigger_stream(
-        spark, poll_seconds=1, on_tick=ticks.append, checkpoint_dir=str(tmp_path / "ckpt")
-    )
-    try:
-        deadline = time.time() + 30
-        while len(ticks) < 2 and time.time() < deadline:
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    assert len(ticks) >= 2  # the poll loop fired repeatedly
-    assert ticks == sorted(ticks)
 
 
 def test_interval_eligibility_and_stale_reclaim(spark):
@@ -110,50 +92,3 @@ def test_interval_eligibility_and_stale_reclaim(spark):
     assert later == {1, 2, 3, 4, 5, 6, 7, 8}
     eng = {r["source_id"]: r["engine"] for r in marked.collect()}
     assert eng[1] == "e1" and eng[2] is None
-
-
-def test_refill_watermarks():
-    """Low/high-watermark refill semantics (main.go:566-715): refill only
-    below low water with a free worker; top up to high water; inactivity
-    closes the pipeline once and permanently."""
-    from thecrowler_spark.streaming.refill import RefillController, RefillPolicy
-
-    t = [0.0]
-    clock = lambda: t[0]  # noqa: E731
-    c = RefillController(RefillPolicy(capacity=8), clock=clock)
-    # queue above low water (4) → no refill even with free workers
-    assert c.need(queued=5, available_workers=3) == 0
-    # below low water but no free worker → backpressure, no refill
-    assert c.need(queued=1, available_workers=0) == 0
-    # below low water + free worker → top up to high water
-    assert c.need(queued=3, available_workers=2) == 5
-    assert c.need(queued=0, available_workers=1) == 8
-
-    # inactivity close: nothing new for 60s while idle
-    c.record_activity(3)
-    t[0] = 30.0
-    assert not c.should_close(pipelines_running=False)
-    t[0] = 95.0
-    assert not c.should_close(pipelines_running=True)  # busy → stay open
-    assert c.should_close(pipelines_running=False)
-    assert c.need(queued=0, available_workers=8) == 0  # closed claims nothing
-    c.record_activity(5)
-    assert c.should_close()  # close is one-way (closeChanOnce analog)
-
-
-def test_refill_claim_integration(spark):
-    from thecrowler_spark.streaming.refill import (
-        RefillController,
-        RefillPolicy,
-        refill_claim,
-    )
-
-    seeds = _seeds(spark, n=50)
-    c = RefillController(RefillPolicy(capacity=6))
-    claimed, n = refill_claim(seeds, c, queued=1, available_workers=2)
-    assert n == 5 and claimed.count() == 5
-    # FIFO determinism: the claim is the head of the eligible order
-    ids = sorted(r["source_id"] for r in claimed.collect())
-    assert ids == [0, 1, 2, 3, 4]
-    none_claim, n2 = refill_claim(seeds, c, queued=6, available_workers=2)
-    assert none_claim is None and n2 == 0

@@ -74,3 +74,11 @@ def test_rows_only_queries(spark):
 def test_entry_smoke(spark):
     df = E.entry(spark)
     assert df.count() > 0
+
+
+def test_warm_up_guard_keys_on_application_id(spark):
+    """queries() records the warmed session by its applicationId: an
+    id(spark) key can be reused by a later session after the first is
+    garbage-collected, and that session would skip its warm-up."""
+    E.queries()
+    assert spark.sparkContext.applicationId in E._WARMED_SESSIONS

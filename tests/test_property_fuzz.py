@@ -6,24 +6,22 @@ contract invariants, instead of hand-picked goldens.
 Two tiers:
 
 * pure-Python scalar twins get wide randomized coverage (hundreds of
-  examples, no Spark): the interval grammar, the exprterpreter DSL, the
-  multimodal codecs, trigram normalization, canonical JSON;
+  examples, no Spark): the interval grammar, the multimodal codecs,
+  trigram normalization, canonical JSON;
 * the URL Column kernels get batch fuzz *parity* against the transcribed
   Go oracle (tests/oracle.py) — hypothesis generates the whole batch and
   ONE Spark job grades it, so example count stays decoupled from job count.
 
 ``derandomize=True`` everywhere: the suite is a deterministic CI gate, not
 an open-ended fuzz farm — hypothesis still explores the grammar corners
-(quote/paren nesting, empty fields, boundary dims) far beyond the golden
-batteries, and any future failure replays byte-identically.
+(empty fields, boundary dims) far beyond the golden batteries, and any
+future failure replays byte-identically.
 """
 
 from __future__ import annotations
 
 import json
-import random
 import re
-from datetime import datetime, timezone
 
 import numpy as np
 from hypothesis import given, settings
@@ -33,8 +31,6 @@ from hypothesis import strategies as st
 WIDE = settings(max_examples=200, deadline=None, derandomize=True)
 NUMPY = settings(max_examples=60, deadline=None, derandomize=True)
 SPARK = settings(max_examples=5, deadline=None, derandomize=True)
-
-FIXED_NOW = datetime(2026, 3, 14, 15, 9, 26, tzinfo=timezone.utc)
 
 
 # ------------------------------------------------------------ intervals
@@ -89,56 +85,6 @@ def test_interval_compound_equals_clamped_sum(h, m, s):
     if want > 1:
         want -= 1
     assert parse_interval_seconds_py(f"{h}h{m}m{s}s") == want
-
-
-# -------------------------------------------------------------- exprdsl
-
-from thecrowler_spark.functions.exprdsl import evaluate, get_float, parse_cmd
-from thecrowler_spark.functions.exprdsl import ExprError  # noqa: F401
-
-
-@WIDE
-@given(st.text(max_size=48))
-def test_get_float_is_total(s):
-    """GetFloat's contract (exprterpreter.go:247-262): ANY failure falls
-    back to 1.0 — no input may raise out of it."""
-    v = get_float(s, rng=random.Random(7), now=FIXED_NOW)
-    assert isinstance(v, float)
-
-
-@WIDE
-@given(st.floats(allow_nan=False, allow_infinity=False, width=32))
-def test_get_float_numeric_passthrough(x):
-    """Plain numbers bypass the interpreter and pass through exactly."""
-    assert get_float(repr(float(x))) == float(x)
-
-
-@WIDE
-@given(st.integers(min_value=0, max_value=1000), st.integers(min_value=0, max_value=1000))
-def test_random_command_within_bounds_and_seed_stable(a, b):
-    """random(a,b): a < b draws inside [a,b] and is a pure function of
-    the injected ``rng(lo, hi)`` callable (the distributed-pacing
-    reproducibility requirement); a >= b is the reference's hard error
-    (exprterpreter.go:181-183) which GetFloat maps to the 1.0 fallback."""
-    v1 = get_float(f"random({a}, {b})", rng=random.Random(99).randint, now=FIXED_NOW)
-    v2 = get_float(f"random({a}, {b})", rng=random.Random(99).randint, now=FIXED_NOW)
-    assert v1 == v2
-    if a < b:
-        assert a <= v1 <= b
-    else:
-        assert v1 == 1.0
-
-
-@WIDE
-@given(st.text(alphabet='random(),"0123456789 abc', max_size=40))
-def test_parser_never_crashes_on_paren_quote_soup(s):
-    """parse_cmd/evaluate may reject (ExprError/ValueError) but never
-    crash on adversarial paren/quote nests (parseParams
-    exprterpreter.go:96-137 is the quote/paren-aware splitter)."""
-    try:
-        evaluate(s, rng=random.Random(3), now=FIXED_NOW)
-    except (ExprError, ValueError):
-        pass
 
 
 # --------------------------------------------------------------- codecs

@@ -1,16 +1,18 @@
-"""End-to-end claim loop: watermark refill → claim_sources → CrawlEngine
-→ mark_processing over a LakeTable of sources — the reference's
-checkSources poll loop as a system (main.go:305-349,566-715). The tick
-mechanism itself (rate-source trigger) is covered by
-test_claim_trigger::test_crawl_trigger_ticks; here the ticks are driven
+"""End-to-end claim loop: claim_sources → CrawlEngine → mark_processing
+over a LakeTable of sources — the reference's checkSources poll loop as
+a system (main.go:305-349,566-715). The ticks are driven
 deterministically so batch content is assertable."""
 
 from __future__ import annotations
 
-from thecrowler_spark.operators.frontier import CrawlConfig, CrawlEngine, mark_processing
+from thecrowler_spark.operators.frontier import (
+    CrawlConfig,
+    CrawlEngine,
+    claim_sources,
+    mark_processing,
+)
 from thecrowler_spark.sources.corpus import CorpusSpec, corpus_to_spark, small_corpus
 from thecrowler_spark.sources.lake import LakeTable
-from thecrowler_spark.streaming.refill import RefillController, RefillPolicy, refill_claim
 
 
 def test_streaming_claim_crawl_mark_loop(spark, tmp_path):
@@ -20,22 +22,15 @@ def test_streaming_claim_crawl_mark_loop(spark, tmp_path):
     sources.write(dfs["seeds"])
 
     eng = CrawlEngine(spark, dfs["documents"], cfg=CrawlConfig(max_depth=1, max_rounds=3))
-    ctrl = RefillController(RefillPolicy(capacity=2, inactivity_timeout_s=300.0))
 
     claimed_ids: list[int] = []
     pages_total = 0
     now = "2026-02-01 00:00:00"
-    for tick in range(6):  # 4 sources / high_water 2 → drained in 2 ticks
-        claimed, n = refill_claim(
-            sources.read(), ctrl, queued=0, available_workers=1, now=now
-        )
-        if claimed is None:
-            continue
+    for tick in range(6):  # 4 sources / 2 per tick → drained in 2 ticks
+        claimed = claim_sources(sources.read(), 2, now=now)
         batch = [r["source_id"] for r in claimed.collect()]
         if not batch:
-            ctrl.record_activity(0)
             continue
-        ctrl.record_activity(len(batch))
         claimed_ids.extend(batch)
         res = eng.run(claimed, run_id=f"tick{tick}")
         pages_total += res.pages.count()
@@ -50,5 +45,3 @@ def test_streaming_claim_crawl_mark_loop(spark, tmp_path):
     # all sources now locked as processing by e0
     final = {(r["source_id"], r["status"], r["engine"]) for r in sources.read().collect()}
     assert final == {(i, "processing", "e0") for i in (1, 2, 3, 4)}
-    # the watermark math claimed at most high_water per tick
-    assert ctrl.policy.high_water == 2

@@ -20,7 +20,6 @@ import hashlib
 import json
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
@@ -61,10 +60,6 @@ def content_identity_hash(body: pd.Series, scraped_json: pd.Series, tech_json: p
         return h.hexdigest()
 
     return pd.Series([one(b, sc, te) for b, sc, te in zip(body, scraped_json, tech_json)])
-
-
-def content_hash_expr(body: Column, scraped: Column, tech: Column) -> Column:
-    return content_identity_hash(body, scraped, tech)
 
 
 def _xml_to_obj(xml_str: str):

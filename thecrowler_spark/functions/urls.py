@@ -259,12 +259,6 @@ def canonical_candidate_url(
     return F.struct(rebuilt.alias("url"), host.alias("host"), ok.alias("ok"))
 
 
-def url_sha256(c: Column | str) -> Column:
-    """sha256 hex of a URL/content string (reference hashes with sha256
-    throughout, e.g. /root/reference/pkg/crawler/crawler.go:1508-1520)."""
-    return F.sha2(_col(c), 256)
-
-
 def salted_host_key(host: Column | str, url: Column | str, salt_buckets: int) -> Column:
     """Skew-killing shuffle key: ``host#pmod(xxhash64(url), S)``.
 

@@ -45,23 +45,6 @@ def token_bucket(c, n_buckets: int = 4096):
     return (h % n_buckets).cast("int")
 
 
-def hashed_features(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 4096,
-) -> DataFrame:
-    """Per-doc hashed bag-of-words: (doc_id, bucket, n_occ)."""
-    toks = docs.select(
-        F.col(id_col), F.explode(TX.tokens(F.col(text_col))).alias("token")
-    )
-    return (
-        toks.withColumn("bucket", token_bucket(F.col("token"), n_buckets))
-        .groupBy(id_col, "bucket")
-        .agg(F.count("*").alias("n_occ"))
-    )
-
-
 def classify_docs(
     docs: DataFrame,
     weights: DataFrame,

@@ -400,11 +400,6 @@ def simhash_chunks(docs: DataFrame, text_col: str = "text", id_col: str = "doc_i
     return docs.select(F.col(id_col).alias("id")).join(sig, "id", "left").select("id", *zeros)
 
 
-def simhash64(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, simhash) — see :func:`simhash_chunks`."""
-    return simhash_chunks(docs, text_col, id_col).select("id", "simhash")
-
-
 def simhash_near_dups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, blocked on 16-bit chunks.
 

@@ -366,21 +366,6 @@ def decode_media(df: DataFrame, real_decode: bool = False) -> DataFrame:
     return df.mapInPandas(batches, DECODED_SCHEMA)
 
 
-def media_spans_table(documents: DataFrame) -> DataFrame:
-    """All media refs in the corpus: explode image/media/blob spans."""
-    s = F.filter(F.col("spans"), lambda x: x["kind"].isin("image", "media", "blob"))
-    return (
-        documents.select(F.col("doc_id"), F.explode(s).alias("sp"))
-        .select(
-            "doc_id",
-            F.col("sp.kind").alias("kind"),
-            F.col("sp.media_ref").alias("media_ref"),
-            F.col("sp.offset").alias("offset"),
-        )
-        .filter(F.col("media_ref") != "")
-    )
-
-
 RESIZED_SCHEMA = (
     "media_ref string, media_type string, target_w int, target_h int, "
     "resized_sha256 string, n_bytes long"
